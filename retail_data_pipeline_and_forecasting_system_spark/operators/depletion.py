@@ -27,11 +27,13 @@ Scale notes
 -----------
 - Parallelism = number of distinct products. A single ultra-hot product is an
   irreducibly sequential timeline (the fold's output for line i depends on
-  all lines < i), so no salting can split it without changing semantics; what
-  CAN be bounded is memory — ``applyInPandas`` materializes one group per
-  task, so for a product whose timeline exceeds executor memory, pre-split
-  the timeline into epochs, run the kernel per epoch, and chain closing stock
-  into the next epoch's opening stock (same fold, staged).
+  all lines < i), so no salting can split it without changing semantics.
+  ``applyInPandas`` materializes one bucket per task, so a product whose
+  timeline exceeds one task's memory does not fit. Splitting such a timeline
+  into epochs that chain closing stock into the next epoch's opening stock
+  (same fold, staged) would bound that memory; it is not implemented.
+- The fold is one Python pass per product timeline, O(lines) whatever the
+  mix of fulfilled and cancelled lines.
 - Cross-day carryover is free: state is per-product and days are concatenated
   in time order, so one multi-day pass ≡ the reference's day loop feeding
   closing stock into the next day (SURVEY.md A5).
@@ -48,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: session -> {products-plan semanticHash -> row count}. The bucketed
-#: fold's default bucket count is bounded by the dim's cardinality
+#: fold's bucket count is bounded by the dim's cardinality
 #: (r14 verdict item 5: 2 x parallelism is over-provisioned when
 #: distinct keys < buckets — retail's 36 products drew 64 buckets).
 #: The count is a PLAN-TUNING statistic, not a result: bucket count
@@ -77,7 +79,10 @@ def _dim_count(products: DataFrame) -> int:
 def _fulfilled_qty(
     stock: int, demands: Iterable[int]
 ) -> list[int]:
-    """Pure-Python greedy-with-skip fold; also serves as the test oracle."""
+    """Greedy-with-skip fold over one key's time-ordered demands.
+
+    The only rendition of the fold: the batch kernel and the stream's
+    group-state fold both call it. A ``None`` or negative demand cancels."""
     out = []
     remaining = stock
     for qty in demands:
@@ -95,7 +100,6 @@ def greedy_inventory_depletion(
     qty_col: str = "qty",
     stock_col: str = "stock",
     order_cols: tuple[str, ...] = ("timestamp", "transaction_id", "line_pos"),
-    num_buckets: int | None = None,
     reset_col: str | None = None,
     result_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
@@ -107,20 +111,6 @@ def greedy_inventory_depletion(
     lines : demand rows; must contain ``product_id``, ``qty_col`` and the
         ``order_cols`` that define the (total) processing order.
     products : one row per product with ``product_id`` and ``stock_col``.
-    num_buckets : parallelism of the grouped-map stage. Products are
-        hash-bucketed so each Arrow batch carries MANY product timelines —
-        per-group pandas/Arrow overhead is amortized (one group per product
-        would pay ~0.2 ms × millions of products), while state stays strictly
-        per-product inside the kernel. Size it ≈ a few × total cores; the
-        default (None) derives min(2 × defaultParallelism, |products|)
-        from the session — scale-adaptive instead of a constant tuned
-        for one machine (r14: the old fixed 128 cost ~8%% extra
-        Arrow/pandas per-group overhead at 32 cores vs 64 buckets,
-        same-JVM A/B at sf0.1), and bounded by the dim cardinality (r15:
-        buckets beyond the distinct-key count buy no parallelism, only
-        overhead — retail's 36-product catalog measured 2.61 -> 2.30 s
-        under 64 -> 36 buckets). Bucket count never changes results —
-        only group-to-task placement.
     reset_col : optional column name; when set, stock resets to the initial
         value at every distinct value of this column (the reference's
         RELOAD_INVENTORY_DAILY mode, src/data_processor.py:53-59: pass the
@@ -137,9 +127,9 @@ def greedy_inventory_depletion(
         a projection pushed inside the kernel.
 
     Returns the input rows plus a ``quantity`` column (fulfilled qty, 0 when
-    cancelled), projected to ``result_cols`` when given. Null-qty lines
-    must be filtered by the caller (reference filters them before
-    depletion, src/data_processor.py:278).
+    cancelled), projected to ``result_cols`` when given. A null-qty line
+    cancels; the retail pipeline filters them out before depletion, as
+    the reference does (src/data_processor.py:278).
     """
     # Attach the per-product opening stock. products is a dim table (36 rows
     # in the reference; dims are small by definition) -> broadcast join, no
@@ -168,43 +158,9 @@ def greedy_inventory_depletion(
     key_cols = ["product_id"] + ([reset_col] if reset_col else [])
     sort_cols = [*key_cols, *order_cols]
 
-    def _greedy_segment(stock: int, q) -> "pd.Series":
-        """Vectorized greedy-with-skip over ONE key's time-ordered demands.
-
-        Accept a cumsum-prefix until the first violating line, cancel it,
-        resume with the remaining stock. Each numpy pass retires one
-        cancellation, so cost is O(rows + rows x cancels-with-stock-left)
-        — and once stock hits zero every later line cancels in one step.
-        Bit-identical to the reference's per-row fold (property-tested
-        against the Python oracle)."""
-        import numpy as np
-
-        n = len(q)
-        out = np.zeros(n, dtype="int64")
-        qa = q  # already int64 with null -> -1 (cancel) applied by caller
-        start, rem = 0, int(stock)
-        while start < n:
-            if rem == 0:
-                # only qty==0 lines can still "fulfill" (with 0) — output
-                # is 0 either way, so everything remaining is settled
-                break
-            seg = qa[start:]
-            bad = (seg < 0) | (np.cumsum(np.maximum(seg, 0)) > rem)
-            viol = np.nonzero(bad)[0]
-            if len(viol) == 0:
-                out[start:] = np.maximum(seg, 0)
-                break
-            v = int(viol[0])
-            if v > 0:
-                out[start : start + v] = seg[:v]
-                rem -= int(seg[:v].sum())
-            start += v + 1  # the violating line is cancelled (output 0)
-        return out
-
     def deplete(pdf: pd.DataFrame) -> pd.DataFrame:
         # rows sorted by (fold key, time); per-key segments are located by
-        # the sort and each is folded with the vectorized kernel — Python
-        # iterates once per product (+ once per cancellation), not per row.
+        # the sort and each is folded by _fulfilled_qty.
         pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
         import numpy as np
 
@@ -226,7 +182,9 @@ def greedy_inventory_depletion(
             )  # null -> -1 -> cancel
             stock_all = pdf["__stock"].to_numpy()
             for lo, hi in zip(bounds[:-1], bounds[1:]):
-                out[lo:hi] = _greedy_segment(int(stock_all[lo]), qty_np[lo:hi])
+                out[lo:hi] = _fulfilled_qty(
+                    int(stock_all[lo]), qty_np[lo:hi].tolist()
+                )
         pdf["quantity"] = out
         return pdf[out_cols]
 
@@ -235,17 +193,14 @@ def greedy_inventory_depletion(
     # sequentially and independently — identical to one-group-per-product.
     from .bucketed import bucketed_fold
 
-    if num_buckets is None:
-        # scale-adaptive default, BOUNDED by the dim's cardinality (r15,
-        # r14 verdict item 5): parallelism can never exceed the number
-        # of distinct products, so buckets beyond that only add
-        # per-group Arrow/pandas and task overhead — measured at 32
-        # cores on the 36-product retail catalog: 2.61 s (64 buckets)
-        # -> 2.30 s (36) best-of-5 same-JVM; a5 (20 k products, cap
-        # never binds) flat. The count is memoized per (session, plan)
-        # — see _DIM_COUNT_MEMO; placement-only, results unchanged.
-        par = lines.sparkSession.sparkContext.defaultParallelism
-        num_buckets = max(1, min(2 * par, _dim_count(products)))
+    # min(2 x defaultParallelism, |products|) buckets: each Arrow batch
+    # carries many product timelines (one group per product would pay
+    # ~0.2 ms x millions of products), the count follows the machine
+    # (r14: a fixed 128 cost ~8% at 32 cores vs 64), and buckets beyond
+    # the distinct-key count buy no parallelism (r15: retail's 36-product
+    # catalog, 2.61 -> 2.30 s under 64 -> 36 buckets). Placement only.
+    par = lines.sparkSession.sparkContext.defaultParallelism
+    num_buckets = max(1, min(2 * par, _dim_count(products)))
     return bucketed_fold(
         stocked, "product_id", deplete, out_schema, num_buckets=num_buckets
     )

@@ -755,7 +755,8 @@ def a3_global_agg(spark, sf):
       SELECT l_partkey AS product_id, CAST(l_quantity AS INT) AS qty,
              l_orderkey, l_linenumber,
              ROW_NUMBER() OVER (PARTITION BY l_partkey
-                                ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn
+                                ORDER BY l_shipdate, l_orderkey, l_linenumber,
+                                         l_quantity) AS rn
       FROM lineitem
     ), stock AS (
       SELECT p_partkey AS product_id, p_size * 20 AS stock FROM part
@@ -793,11 +794,15 @@ def a5_inventory_depletion(spark, sf):
     )
     # r15: the kernel's return trip carries only the four consumed
     # columns — l_shipdate (a date) and the raw qty stay in Python
-    # (guide §4; values identical, projection pushed inside the kernel)
+    # (guide §4; values identical, projection pushed inside the kernel).
+    # qty is the last order key because (l_orderkey, l_linenumber) may
+    # repeat within a part and ship date: lines tied on all other keys
+    # but not on qty would fold in an engine-dependent order; lines that
+    # also tie on qty give the same output rows whichever goes first.
     out = greedy_inventory_depletion(
         li,
         stock,
-        order_cols=("l_shipdate", "l_orderkey", "l_linenumber"),
+        order_cols=("l_shipdate", "l_orderkey", "l_linenumber", "qty"),
         result_cols=("l_orderkey", "product_id", "l_linenumber", "quantity"),
     )
     return out.select(

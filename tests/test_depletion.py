@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import datetime as dt
+import time
 
+import duckdb
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -11,6 +14,9 @@ from pyspark.sql import functions as F
 from retail_data_pipeline_and_forecasting_system_spark.operators.depletion import (
     _fulfilled_qty,
     greedy_inventory_depletion,
+)
+from retail_data_pipeline_and_forecasting_system_spark.plans.analytics import (
+    QUERIES,
 )
 
 
@@ -85,19 +91,92 @@ def test_python_oracle_matches_spark(spark):
 
 @given(
     stock=st.integers(min_value=0, max_value=30),
-    demands=st.lists(st.integers(min_value=1, max_value=8), max_size=20),
+    demands=st.lists(
+        st.one_of(st.none(), st.integers(min_value=-3, max_value=8)),
+        max_size=20,
+    ),
 )
 @settings(max_examples=200, deadline=None)
 def test_oracle_invariants(stock, demands):
     out = _fulfilled_qty(stock, demands)
     assert len(out) == len(demands)
     assert sum(out) <= stock  # never oversell
-    for got, want in zip(out, demands):
-        assert got in (0, want)  # all-or-nothing per line
-    # greedy: a line is cancelled only if remaining stock was insufficient
+    # greedy: a valid line is all-or-nothing, and cancelled only if the
+    # remaining stock was insufficient; a null or negative demand cancels
     remaining = stock
     for got, want in zip(out, demands):
-        if got:
-            remaining -= got
+        if want is None or want < 0:
+            assert got == 0
+        elif got == want:
+            remaining -= want
         else:
-            assert want > remaining
+            assert got == 0 and want > remaining
+    # the batch kernel maps null qty to -1 before folding
+    assert _fulfilled_qty(stock, [-1 if d is None else d for d in demands]) == out
+
+
+def test_cancel_heavy_hot_product_is_linear(spark):
+    """One product, 80 k lines alternating an unfillable 10**6 with a 1,
+    stock never reaching 0: every other line cancels while stock
+    remains. The fold is one pass per timeline, so this stays cheap; a
+    kernel that rescans the tail after each such cancellation is
+    quadratic here (about 11 s for that kernel alone at this size)."""
+    n = 80_000
+    lines = spark.range(n).select(
+        F.lit(1).cast("int").alias("product_id"),
+        F.when(F.col("id") % 2 == 0, F.lit(10**6))
+        .otherwise(F.lit(1))
+        .cast("int")
+        .alias("qty"),
+        F.col("id").alias("timestamp"),
+        F.col("id").alias("transaction_id"),
+        F.lit(0).alias("line_pos"),
+    )
+    products = _mk_products(spark, {1: n})
+    out = greedy_inventory_depletion(
+        lines, products, result_cols=("transaction_id", "quantity")
+    )
+    t0 = time.perf_counter()
+    rows = out.collect()
+    wall = time.perf_counter() - t0
+    assert sorted((r["transaction_id"], r["quantity"]) for r in rows) == [
+        (i, i % 2) for i in range(n)
+    ]
+    assert wall < 6.0, f"collect took {wall:.2f} s"
+
+
+def _a5_tables(tmp_path, quantities):
+    """lineitem/part parquet for a5: one part, lines tied on
+    (l_partkey, l_shipdate, l_orderkey, l_linenumber), in the given order."""
+    n = len(quantities)
+    pd.DataFrame(
+        {
+            "l_orderkey": [1] * n,
+            "l_partkey": [7] * n,
+            "l_linenumber": pd.Series([1] * n, dtype="int32"),
+            "l_quantity": [float(q) for q in quantities],
+            "l_shipdate": pd.to_datetime(["1995-01-01"] * n).astype(
+                "datetime64[us]"
+            ),
+        }
+    ).to_parquet(tmp_path / "lineitem.parquet", index=False)
+    # stock = p_size * 20 = 20
+    pd.DataFrame(
+        {"p_partkey": [7], "p_size": pd.Series([1], dtype="int32")}
+    ).to_parquet(tmp_path / "part.parquet", index=False)
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("quantities", [(20, 12), (12, 20)])
+def test_a5_fold_order_is_total_on_tied_lines(spark, tmp_path, quantities):
+    """Two lines tied on every a5 order key but qty, stock 20: the
+    smaller qty folds first whatever the input order, so 12 is filled
+    and 20 cancelled, in Spark and in the DuckDB oracle alike."""
+    sf = _a5_tables(tmp_path, quantities)
+    spec = QUERIES["a5_inventory_depletion"]
+    mine = sorted(tuple(r) for r in spec.fn(spark, sf).collect())
+    con = duckdb.connect()
+    for t in ("lineitem", "part"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    want = sorted(con.execute(spec.sql).fetchall())
+    assert mine == want == [(1, 7, 1, 0), (1, 7, 1, 12)]

@@ -9,14 +9,17 @@ carryover == cross-day carryover.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 from pathlib import Path
 
-import pytest
 from pyspark.sql import functions as F
 
+from retail_data_pipeline_and_forecasting_system_spark.operators.depletion import (
+    greedy_inventory_depletion,
+)
 from retail_data_pipeline_and_forecasting_system_spark.plans.retail import (
     explode_transactions,
     process_lines,
@@ -76,93 +79,72 @@ def test_streaming_matches_batch(spark, tmp_path):
     assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
 
 
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    """The Spark 4 transformWithStateInPandas rendition (typed state
-    handles + DISTRIBUTED initial state) produces exactly the batch
-    engine's fulfilled quantities — state-v2 twin of
-    test_streaming_matches_batch, on a 3-day replay.
-
-    Requires protobuf (the state-v2 Python worker speaks proto to the
-    JVM state server); absent from this container, so the test skips —
-    the applyInPandasWithState twin above carries the parity proof."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState needs protobuf"
-    )
-    from retail_data_pipeline_and_forecasting_system_spark.streaming.inventory_stream import (
-        read_transaction_stream,
-        streaming_depletion_tws,
-    )
-
+def test_stream_carries_stock_across_days_like_batch(spark, tmp_path):
+    """Two tiny day files, no external data. Product 1 (stock 10) cancels
+    an 8 on day 1 while 6 remain, then day 2 sees only the 1 it carried
+    over; product 2 (stock 3) sells out on day 1. The stream's group
+    state, the batch kernel and the hand-folded list must agree."""
+    days = {
+        "transactions_2024-02-01.json": [
+            (1, "2024-02-01 09:00:00", [(1, 4), (2, 3)]),
+            (2, "2024-02-01 10:00:00", [(1, 8)]),
+            (3, "2024-02-01 11:00:00", [(1, 5), (1, None)]),
+        ],
+        "transactions_2024-02-02.json": [
+            (4, "2024-02-02 09:00:00", [(1, 2), (2, 1)]),
+            (5, "2024-02-02 10:00:00", [(1, 1)]),
+        ],
+    }
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    days = sorted(DATASET.glob("transactions_*.json"))[:3]
-    for i, f in enumerate(days):
-        dst = in_dir / f.name
-        shutil.copy(f, dst)
-        ts = time.time() - 1000 + i
-        os.utime(dst, (ts, ts))
+    for i, (name, txns) in enumerate(days.items()):
+        docs = [
+            {
+                "transaction_id": tid,
+                "customer_id": 1,
+                "timestamp": ts,
+                "items": [
+                    {"product_id": pid, "product_name": f"p{pid}", "qty": q}
+                    for pid, q in items
+                ],
+            }
+            for tid, ts, items in txns
+        ]
+        dst = in_dir / name
+        dst.write_text(json.dumps(docs))
+        mtime = time.time() - 1000 + i
+        os.utime(dst, (mtime, mtime))
+    stock = {1: 10, 2: 3}
+    # (transaction_id, product_id, line_pos) -> fulfilled qty
+    want = {
+        (1, 1, 0): 4, (1, 2, 1): 3,
+        (2, 1, 0): 0,
+        (3, 1, 0): 5,
+        (4, 1, 0): 0, (4, 2, 1): 0,
+        (5, 1, 0): 1,
+    }
 
-    products = read_products_csv(spark, str(DATASET / "products.csv"))
-    initial = products.select(
-        "product_id", F.col("stock").cast("int").alias("stock")
-    )
-
-    lines = read_transaction_stream(
-        spark, str(in_dir / "*.json"), max_files_per_trigger=1
-    )
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    # transformWithState requires the RocksDB state store
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            streaming_depletion_tws(lines, initial)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
+    run_available_now(spark, str(in_dir / "*.json"), stock, ckpt, out_dir)
+    keys = ["transaction_id", "product_id", "line_pos"]
+    streamed = {
+        tuple(r[:3]): r[3]
+        for r in spark.read.parquet(out_dir).select(*keys, "quantity").collect()
+    }
 
-    streamed = (
-        spark.read.parquet(out_dir)
-        .select("transaction_id", "product_id", "line_pos", "quantity")
-        .toPandas()
-        .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
-        .to_dict()
+    lines = explode_transactions(
+        read_transactions_json(spark, str(in_dir / "*.json"))
+    ).filter(F.col("qty").isNotNull())
+    products = spark.createDataFrame(
+        list(stock.items()), "product_id int, stock int"
     )
-
-    names = " ".join(f.name for f in days)
-    raw = read_transactions_json(
-        spark, str(in_dir / "*.json")
-    )
-    batch = (
-        process_lines(
-            explode_transactions(raw), products, process_order="timestamp"
-        )
-        .select("transaction_id", "product_id", "line_pos", "quantity")
-        .toPandas()
-        .set_index(["transaction_id", "product_id", "line_pos"])["quantity"]
-        .to_dict()
-    )
-    assert len(streamed) == len(batch) > 0, names
-    diffs = {k for k in batch if streamed.get(k) != batch[k]}
-    assert not diffs, f"{len(diffs)} mismatching lines, e.g. {sorted(diffs)[:5]}"
+    batch = {
+        tuple(r[:3]): r[3]
+        for r in greedy_inventory_depletion(lines, products)
+        .select(*keys, "quantity")
+        .collect()
+    }
+    assert streamed == batch == want
 
 
 def test_streaming_matches_batch_when_groups_span_arrow_chunks(

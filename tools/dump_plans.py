@@ -1,10 +1,21 @@
-"""Regenerate PLANS.md: formatted physical plans for flagship queries.
+"""Dump formatted physical plans.
 
-Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
+Usage:
+    python tools/dump_plans.py
+        Regenerate PLANS.md at the repo root: the flagship queries at
+        sf0.001.
+    python tools/dump_plans.py --out plans/r16 --tag before|after [query ...]
+        Write OUT/<query>_<tag>.txt for each bench=True registry entry
+        (default) or just the named ones, captured at sf0.1, the scale
+        the bench measures, so Exchange counts and join strategies match
+        the measured numbers. The retail pipeline's four outputs are
+        dumped as retail_<name>_<tag>.txt when the reference dataset_15
+        is present.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import sys
@@ -21,6 +32,8 @@ from retail_data_pipeline_and_forecasting_system_spark.session import (  # noqa:
 )
 
 SF = "/root/testdata/sf0.001"
+BENCH_SF = str(Path(SF).with_name("sf0.1"))
+DATASET = Path("/root/reference/data/dataset_15")
 # every bench=True query is always included (the judge reads PLANS.md
 # against BENCH_r{N}.json), plus these hand-picked non-bench flagships
 FLAGSHIPS = [
@@ -228,20 +241,80 @@ at sf0.001). What to look for, per the scale argument in SCALE.md:
 """
 
 
-def main() -> None:
-    spark = get_session("dump-plans")
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def write_plans_md(spark) -> None:
     bench = [n for n, s in QUERIES.items() if s.bench]
     names = bench + [n for n in FLAGSHIPS if n not in bench]
     out = [HEADER]
     for name in names:
         spec = QUERIES[name]
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            spec.fn(spark, SF).explain("formatted")
         out.append(f"\n## {name}\n\n> {spec.scale or spec.ref}\n")
-        out.append("```\n" + buf.getvalue().rstrip() + "\n```\n")
+        out.append("```\n" + _explain(spec.fn(spark, SF)).rstrip() + "\n```\n")
     (REPO / "PLANS.md").write_text("\n".join(out))
     print(f"wrote {REPO / 'PLANS.md'} ({len(names)} plans)")
+
+
+def write_tagged(spark, out_dir: Path, tag: str, only: set[str]) -> None:
+    out_dir.mkdir(parents=True, exist_ok=True)
+    names = [n for n, s in QUERIES.items() if s.bench]
+    if only:
+        names = [n for n in names if n in only]
+    for name in names:
+        plan = _explain(QUERIES[name].fn(spark, BENCH_SF))
+        (out_dir / f"{name}_{tag}.txt").write_text(plan)
+        print(f"wrote {name}_{tag}.txt")
+
+    if only and not any(n.startswith("retail") for n in only):
+        return
+    if not DATASET.exists():
+        print(f"retail plans skipped: {DATASET} not found")
+        return
+    from retail_data_pipeline_and_forecasting_system_spark.plans.retail import (
+        release_retail_pipeline,
+        run_retail_pipeline,
+    )
+    from retail_data_pipeline_and_forecasting_system_spark.sources import (
+        read_products_csv,
+        read_transactions_json,
+    )
+
+    products = read_products_csv(spark, str(DATASET / "products.csv"))
+    raw = read_transactions_json(spark, str(DATASET / "transactions_*.json"))
+    outs = run_retail_pipeline(raw, products)
+    for out_name in (
+        "orders", "order_line_items", "daily_summary", "products_updated",
+    ):
+        (out_dir / f"retail_{out_name}_{tag}.txt").write_text(
+            _explain(outs[out_name])
+        )
+        print(f"wrote retail_{out_name}_{tag}.txt")
+    release_retail_pipeline(outs)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", type=Path, help="directory for tagged dumps")
+    ap.add_argument("--tag", help="suffix of each tagged dump, e.g. before")
+    ap.add_argument("queries", nargs="*", help="bench entries to dump")
+    args = ap.parse_args()
+    if (args.out is None) != (args.tag is None):
+        ap.error("--out and --tag go together")
+    if args.out is None and args.queries:
+        ap.error("query names need --out and --tag")
+
+    spark = get_session("dump-plans")
+    if args.out is None:
+        write_plans_md(spark)
+        return
+    spark.sparkContext.setLogLevel("ERROR")
+    write_tagged(spark, args.out, args.tag, set(args.queries))
+    spark.stop()
 
 
 if __name__ == "__main__":
