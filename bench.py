@@ -157,6 +157,11 @@ def main() -> None:
         print(
             f"# retail_pipeline_dataset15: {best:.3f}s", file=sys.stderr
         )
+    else:
+        print(
+            f"# retail_pipeline_dataset15: skipped — {ds} absent",
+            file=sys.stderr,
+        )
 
     total = round(sum(timings.values()), 4)
     print(

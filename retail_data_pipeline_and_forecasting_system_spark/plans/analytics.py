@@ -34,6 +34,7 @@ Each entry's `ref` cites the reference behavior it generalizes
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -9678,7 +9679,12 @@ def _n15_sql() -> str:
       CAST(n_steps AS INT) AS n_steps
     FROM s4
     """)
-    return "".join(blocks)
+    # Every CTE, n13's inlined graph chain included, is referenced many
+    # times down the unrolled walk; inlined, DuckDB re-plans the graph
+    # build per reference and runs out of memory at sf0.001. Materializing
+    # each CTE once keeps the same semantics. (In this SQL " AS (" only
+    # ever opens a CTE body.)
+    return re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", "".join(blocks))
 
 
 @q(

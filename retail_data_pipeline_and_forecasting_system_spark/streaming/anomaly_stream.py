@@ -1,9 +1,6 @@
 """Streaming anomaly detection: h10's rolling z-score, live.
 
-The fifth leg of the ingest-service family (dedup_stream gates
-documents, semantic_stream gates embeddings, cdc_stream maintains
-dimension state, rollup_stream maintains per-customer rollups): an
-orders stream maintains the DAILY REVENUE table incrementally — each
+An orders stream maintains the DAILY REVENUE table incrementally — each
 micro-batch aggregates to per-day cent deltas
 (``plans.analytics.daily_revenue_cents``) and merges them into the
 stored day table by exact bigint addition — and the anomaly scores are
@@ -21,11 +18,9 @@ correct under late data: an order arriving for a PAST day updates that
 day's cents, and every window that contains the day re-scores
 automatically on the next read.
 
-Replay safety — same epoch-guard contract as rollup_stream: a cents
-merge double-counts if an epoch re-fires, so the sink stores the last
-applied epoch id in the state table and skips batch_id == last
-(Structured Streaming's crash-replay), failing loudly on batch_id <
-last (a fresh checkpoint pointed at an old table is operator error).
+Replay safety: a cents merge double-counts if an epoch re-fires, so
+the sink is a ``sinks.epoch_guarded_sink`` (the replay contract is
+stated there).
 
 Scale: state is day-cardinality-sized; each epoch aggregates only its
 delta (map-side combined) and merges with one day-keyed union-agg over
@@ -41,58 +36,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.analytics import daily_revenue_cents, zscore_flags
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain, epoch_guarded_sink
+
+ORDER_SCHEMA = (
+    "o_orderkey long, o_custkey long, o_totalprice double,"
+    " o_orderdate timestamp"
+)
+
+
+def _merge_day_cents(cur: DataFrame, delta: DataFrame) -> DataFrame:
+    return (
+        cur.select("day", "revenue_cents")
+        .union(delta)
+        .groupBy("day")
+        .agg(F.sum("revenue_cents").cast("bigint").alias("revenue_cents"))
+    )
 
 
 def anomaly_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch function maintaining the (day, revenue_cents)
     state table from a stream of order rows.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            anomaly_state_sink(table_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = daily_revenue_cents(batch_df)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD: cent merges double-count under replay (see
-            # rollup_stream for the full contract discussion)
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"anomaly_state_sink: batch_id {batch_id} is "
-                    f"behind the table's last applied epoch {last} — "
-                    "a new checkpoint lineage is pointed at an "
-                    "existing state table; use a fresh table_dir (or "
-                    "resume the original checkpoint)"
-                )
-            out = (
-                cur.select("day", "revenue_cents")
-                .union(delta)
-                .groupBy("day")
-                .agg(
-                    F.sum("revenue_cents").cast("bigint").alias(
-                        "revenue_cents"
-                    )
-                )
-            )
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return epoch_guarded_sink(
+        table_dir, daily_revenue_cents, _merge_day_cents
+    )
 
 
 def read_anomaly_scores(
@@ -110,28 +78,15 @@ def read_anomaly_scores(
 
 
 def run_anomaly_ingest(
-    spark,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema: str = (
-        "o_orderkey long, o_custkey long, o_totalprice double,"
-        " o_orderdate timestamp"
-    ),
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain a parquet drop-dir of order rows into the anomaly state
-    with ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+    spark, input_dir: str, table_dir: str, checkpoint_dir: str
+) -> list:
+    """Drain a parquet drop-dir of order rows into the anomaly state,
+    one epoch per file; returns the per-epoch progress
+    (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(ORDER_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(anomaly_state_sink(table_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .writeStream.foreachBatch(anomaly_state_sink(table_dir)),
+        checkpoint_dir,
     )

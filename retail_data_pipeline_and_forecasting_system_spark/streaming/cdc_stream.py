@@ -1,11 +1,10 @@
 """Streaming CDC apply: a change feed maintains a versioned snapshot table.
 
-The third leg of the ingest-service trio (dedup_stream gates documents,
-semantic_stream gates embeddings; this one maintains DIMENSION state):
-a stream of ``upsert``/``delete`` change rows is applied per micro-batch
-to a :mod:`sources.versioned` snapshot table — the streaming MERGE shape
-lakehouse formats call "apply changes", built from two pieces this repo
-already trusts: ``operators.scd.merge_upsert`` (the batch MERGE) and the
+Maintains DIMENSION state: a stream of ``upsert``/``delete`` change
+rows is applied per micro-batch to a :mod:`sources.versioned` snapshot
+table — the streaming MERGE shape lakehouse formats call "apply
+changes", built from two pieces this repo already trusts:
+``operators.scd.merge_upsert`` (the batch MERGE) and the
 stage-then-flip versioned writer (atomic commit, time travel).
 
 Each epoch:
@@ -61,6 +60,9 @@ from pyspark.sql import functions as F
 
 from ..operators.scd import merge_upsert
 from ..sources.versioned import current_version, read_version, write_version
+from .sinks import drain
+
+CHANGE_SCHEMA = "k long, op string, seq long, val string"
 
 
 def cdc_apply_sink(
@@ -87,12 +89,6 @@ def cdc_apply_sink(
     feed segment is older (the same contract lakehouse MERGE formats
     ship). Default stays tombstone-free: physical deletes, lighter
     snapshots, last-epoch-replay-safe.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            cdc_apply_sink(table_dir, "k")
-        ).option("checkpointLocation", ckpt).start()
     """
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -199,24 +195,16 @@ def run_cdc_apply(
     table_dir: str,
     checkpoint_dir: str,
     key_col: str = "k",
-    schema: str = "k long, op string, seq long, val string",
-    max_files_per_trigger: int = 1,
     **sink_kwargs,
-) -> None:
-    """Drain a JSON-lines change feed into the versioned table with
-    ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+) -> list:
+    """Drain a JSON-lines change feed into the versioned table, one
+    epoch per file; returns the per-epoch progress (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(CHANGE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
+        .writeStream.foreachBatch(
             cdc_apply_sink(table_dir, key_col, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )

@@ -15,11 +15,9 @@ the same convention as ``sinks.idempotent_parquet_sink``):
   batch readers scan the root and see the whole corpus.
 - ``verdicts_dir/batch_id=<n>/`` — (doc_id, status, match_id) per epoch.
 
-Crash/replay: Structured Streaming re-runs the last uncommitted epoch
-after a crash. Both writes use dynamic partition overwrite into the
-epoch's own partition, so the replay overwrites its possibly-partial
-output instead of appending beside it — the corpus converges to the same
-files. The corpus read for the replayed epoch excludes the epoch's OWN
+Crash/replay: both writes overwrite the epoch's own partition (the
+epoch-partition contract in ``sinks``), so the corpus converges to the
+same files. The corpus read for the replayed epoch excludes the epoch's OWN
 partition explicitly, so a partially-committed epoch never dedups against
 itself (without that, a replayed doc would match its own half-written
 copy and be rejected as 'exact', corrupting the corpus).
@@ -49,6 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..operators.dedup import incremental_dedup
+from .sinks import drain, write_epoch_partition
+
+DOC_SCHEMA = "doc_id long, text string"
 
 
 def incremental_dedup_sink(
@@ -63,12 +64,6 @@ def incremental_dedup_sink(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: gate each micro-batch through
     corpus-incremental dedup, record verdicts, admit unique docs.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            incremental_dedup_sink(corpus_dir, verdicts_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -104,39 +99,18 @@ def incremental_dedup_sink(
             cache_tracker=tracker,
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # verdicts are consumed twice (write + unique-filter join):
             # persist the small frame instead of re-running the dedup
             verdicts = verdicts.persist()
             tracker.append(verdicts)
-            (
-                verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdicts_dir)
-            )
+            write_epoch_partition(verdicts, batch_id, verdicts_dir)
             accepted = batch.select(id_col, text_col).join(
                 verdicts.filter(F.col("status") == "unique").select(id_col),
                 id_col,
             )
-            (
-                accepted.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
-            )
+            write_epoch_partition(accepted, batch_id, corpus_dir)
         finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # conf was UNSET before this epoch: unset it again rather
-                # than leaving the session pinned to 'dynamic' (same
-                # hygiene as sinks.idempotent_parquet_sink)
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             for frame in tracker:
                 frame.unpersist()
 
@@ -149,26 +123,16 @@ def run_dedup_ingest(
     corpus_dir: str,
     verdicts_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    max_files_per_trigger: int = 1,
     **dedup_kwargs,
-) -> None:
-    """Drain a JSON-lines document feed through the dedup gate with
-    ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up — the batch
-    harness for the sink above; a service would ``start()`` without
-    AvailableNow and run forever."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+) -> list:
+    """Drain a JSON-lines document feed through the dedup gate, one
+    epoch per file; returns the per-epoch progress (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
+        .writeStream.foreachBatch(
             incremental_dedup_sink(corpus_dir, verdicts_dir, **dedup_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )

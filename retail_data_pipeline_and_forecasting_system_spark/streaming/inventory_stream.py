@@ -33,6 +33,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.depletion import _fulfilled_qty
 from ..schemas import TRANSACTIONS_RAW
+from .sinks import drain
 
 LINE_SCHEMA = T.StructType(
     [
@@ -131,17 +132,16 @@ def run_available_now(
     initial_stock: dict[int, int],
     checkpoint_dir: str,
     output_dir: str,
-) -> None:
-    """Process everything currently available as checkpointed micro-batches,
-    then stop (the streaming equivalent of the reference's one-shot batch)."""
+) -> list:
+    """Process everything currently available as checkpointed micro-batches
+    (one day file per epoch) into a parquet file sink, then stop (the
+    streaming equivalent of the reference's one-shot batch); returns the
+    per-epoch progress (``sinks.drain``)."""
     lines = read_transaction_stream(spark, input_glob, max_files_per_trigger=1)
-    filled = streaming_depletion(lines, initial_stock)
-    query = (
-        filled.writeStream.format("parquet")
+    return drain(
+        streaming_depletion(lines, initial_stock)
+        .writeStream.format("parquet")
         .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()

@@ -1,16 +1,14 @@
 """Streaming M4 maintenance: h15's viz downsample, kept current per
 epoch.
 
-The TENTH leg of the ingest-service family, and the first in the
-IDEMPOTENT-merge class: the M4 state is four lexicographic-extreme
-structs per (series, day-bucket), and min/max of a multiset ignores
-multiplicity — re-applying a crash-replayed epoch (or any subset of
-already-seen rows) is a mathematical no-op. So unlike the counted
-manifests (manifest/zonemap/rollup/scrub_stream, whose SUM columns
-double-apply and need the last-epoch guard), this sink needs NO epoch
-guard: it is naturally convergent, the same replay class as
-cdc_stream's keyed upsert. ``tests/test_m4_stream.py`` pins exactly
-that (double-applying an epoch leaves the state bit-identical).
+The IDEMPOTENT-merge class of ingest service: the M4 state is four
+lexicographic-extreme structs per (series, day-bucket), and min/max of
+a multiset ignores multiplicity — re-applying already-seen rows is a
+no-op (``tests/test_m4_stream.py`` pins it), the replay class of
+cdc_stream's keyed upsert. The sink still takes
+``sinks.epoch_guarded_sink``: on its own lineage the guard only skips
+work the merge would undo, and a foreign checkpoint lineage pointed at
+an existing table fails loudly instead of merging silently.
 
 Operationally this is the live-dashboard shape: a monitoring UI
 renders the maintained M4 table directly — pixel-perfect line charts
@@ -25,34 +23,21 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.m4 import finalize_m4, m4_state, merge_m4_states
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain, epoch_guarded_sink
+
+EVENT_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, "
+    "event_type string, value double, props string"
+)
 
 
 def m4_state_sink(table_dir: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch function maintaining the per-(series, bucket) M4
-    state. No epoch guard: the extreme-struct merge is idempotent, so
-    replay convergence holds by construction (see module docstring).
-    """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = m4_state(batch_df)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir).drop("__epoch")
-            out = merge_m4_states(cur, delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    state (a ``sinks.epoch_guarded_sink``; see module docstring)."""
+    return epoch_guarded_sink(table_dir, m4_state, merge_m4_states)
 
 
 def read_m4(
@@ -66,28 +51,14 @@ def read_m4(
 
 
 def run_m4_ingest(
-    spark,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema: str = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ),
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain a parquet drop-dir of event rows into the M4 state with
-    ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+    spark, input_dir: str, table_dir: str, checkpoint_dir: str
+) -> list:
+    """Drain a parquet drop-dir of event rows into the M4 state, one
+    epoch per file; returns the per-epoch progress (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(m4_state_sink(table_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .writeStream.foreachBatch(m4_state_sink(table_dir)),
+        checkpoint_dir,
     )

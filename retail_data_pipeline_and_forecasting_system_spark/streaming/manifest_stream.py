@@ -1,17 +1,14 @@
 """Streaming export-manifest maintenance: x55's receipt, per epoch.
 
-The seventh leg of the ingest-service family (dedup_stream gates
-documents, semantic_stream gates embeddings, cdc_stream maintains
-dimensions, rollup_stream maintains aggregates, anomaly/segment score
-streams): a documents stream maintains the per-shard export manifest
+A documents stream maintains the per-shard export manifest
 INCREMENTALLY — each micro-batch reduces to a per-shard delta state
 (``operators.manifest.manifest_state``) and merges into the stored
 state (``merge_manifest_states``). Because every state column is
 algebraic — counts/bytes/tokens sum, spans min/max, and the content
 digest is a commutative u64 sum mod 2^64 — draining the same documents
-through ANY epoch slicing yields the identical manifest the batch
-query ``x55_export_manifest`` computes in one pass, Merkle root
-included (``tests/test_manifest_stream.py`` asserts exact equality).
+through ANY epoch slicing yields the identical manifest the batch query
+``x55_export_manifest`` computes in one pass, Merkle root included
+(``tests/test_manifest_stream.py`` asserts exact equality).
 
 This is the 100 TB operational story for the export receipt: a
 continuously-appended corpus keeps its manifest CURRENT at
@@ -19,12 +16,9 @@ delta-proportional cost per epoch (the full-corpus rehash is never
 paid again), and the ingest side can verify any snapshot against the
 maintained root.
 
-Replay safety — same contract as rollup_stream: a digest/count merge
-is NOT naturally convergent (re-applying an epoch double-counts,
-unlike the CDC upsert), so the sink stores the last applied epoch id
-in the state table and SKIPS the crash-replayed epoch; a batch id
-BEHIND the stored epoch means a fresh checkpoint was pointed at an
-existing state table and fails loudly.
+Replay safety: a digest/count merge double-counts if an epoch
+re-fires, so the sink is a ``sinks.epoch_guarded_sink`` (the replay
+contract is stated there).
 
 Scale: the stored state is shard-cardinality-sized (16 rows here,
 ~100k at 100 TB — still trivially small); each epoch hashes ONLY its
@@ -39,59 +33,28 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.manifest import (
     finalize_manifest,
     manifest_state,
     merge_manifest_states,
 )
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain, epoch_guarded_sink
+
+DOC_SCHEMA = "doc_id long, text string, source string"
 
 
 def manifest_state_sink(
     table_dir: str, **manifest_kwargs
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function maintaining the per-shard manifest state.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            manifest_state_sink(table_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = manifest_state(batch_df, **manifest_kwargs)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD (the rollup_stream contract): digest sums
-            # double-count under replay, so the crash-replayed epoch
-            # is dropped; an epoch BEHIND the table is a new
-            # checkpoint lineage against an old table — fail loudly.
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"manifest_state_sink: batch_id {batch_id} is "
-                    f"behind the table's last applied epoch {last} — "
-                    "a new checkpoint lineage is pointed at an "
-                    "existing state table; use a fresh table_dir (or "
-                    "resume the original checkpoint)"
-                )
-            out = merge_manifest_states(cur.drop("__epoch"), delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return epoch_guarded_sink(
+        table_dir,
+        lambda batch: manifest_state(batch, **manifest_kwargs),
+        merge_manifest_states,
+    )
 
 
 def read_manifest(
@@ -105,28 +68,17 @@ def read_manifest(
 
 
 def run_manifest_ingest(
-    spark,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string, source string",
-    max_files_per_trigger: int = 1,
-    **sink_kwargs,
-) -> None:
+    spark, input_dir: str, table_dir: str, checkpoint_dir: str, **sink_kwargs
+) -> list:
     """Drain a parquet drop-dir of document rows into the manifest
-    state with ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+    state, one epoch per file; returns the per-epoch progress
+    (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
+        .writeStream.foreachBatch(
             manifest_state_sink(table_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )

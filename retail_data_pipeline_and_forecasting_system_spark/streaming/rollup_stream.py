@@ -1,9 +1,7 @@
 """Streaming rollup maintenance: the ops6 agg-state merge, per epoch.
 
-The fourth leg of the ingest-service family (dedup_stream gates
-documents, semantic_stream gates embeddings, cdc_stream maintains
-dimension state): an orders stream maintains the per-customer lifetime
-rollup INCREMENTALLY — each micro-batch aggregates to a delta state
+An orders stream maintains the per-customer lifetime rollup
+INCREMENTALLY — each micro-batch aggregates to a delta state
 (``operators.rollup.rollup_state``) and merges into the stored state
 (``merge_rollup_states``), exactly the base+delta merge the batch query
 ``ops6_incremental_agg`` proves equal to full recompute against its
@@ -12,14 +10,10 @@ column is exact decimal, draining the same rows through ANY epoch
 slicing yields the identical state a single batch recompute yields —
 the equality ``tests/test_rollup_stream.py`` asserts.
 
-Replay safety — the part that DIFFERS from the CDC sink: an agg merge
-is NOT naturally convergent (re-applying an epoch double-counts, where
-re-upserting a row is a no-op). The sink therefore stores the last
-applied epoch id in the state table (constant ``__epoch`` column) and
-SKIPS any batch whose id is <= it — Structured Streaming's replay
-contract (re-run the last uncommitted epoch after a crash) then applies
-each epoch exactly once. The guard costs one driver-side read of a
-single value off the model-sized state table.
+Replay safety: an agg merge is NOT naturally convergent (re-applying
+an epoch double-counts, where re-upserting a row is a no-op), so the
+sink is a ``sinks.epoch_guarded_sink`` — the replay contract is stated
+there once.
 
 Scale: the stored state is key-cardinality-sized (customers, not
 orders); each epoch aggregates ONLY its delta (map-side combined) and
@@ -37,7 +31,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.rollup import merge_rollup_states, rollup_state
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain, epoch_guarded_sink
+
+ORDER_SCHEMA = (
+    "o_orderkey long, o_custkey long, o_totalprice double,"
+    " o_orderdate timestamp"
+)
 
 
 def rollup_state_sink(
@@ -47,51 +47,12 @@ def rollup_state_sink(
     ts_col: str = "o_orderdate",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function maintaining the per-key rollup state.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            rollup_state_sink(table_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = rollup_state(batch_df, key_col, value_col, ts_col)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD: agg merges double-count under replay, so a
-            # re-fired epoch (crash before checkpoint commit) must be
-            # dropped, not re-merged. One scalar off the state table.
-            # batch_id == last is that legitimate replay; batch_id <
-            # last means a DIFFERENT checkpoint lineage (fresh/cleared
-            # checkpoint against an existing table) whose batches
-            # would otherwise be silently discarded — that is an
-            # operator error, so fail loudly instead of no-oping.
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"rollup_state_sink: batch_id {batch_id} is behind "
-                    f"the table's last applied epoch {last} — a new "
-                    "checkpoint lineage is pointed at an existing "
-                    "state table; use a fresh table_dir (or resume "
-                    "the original checkpoint)"
-                )
-            out = merge_rollup_states(
-                cur.drop("__epoch"), delta, key_col
-            )
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return epoch_guarded_sink(
+        table_dir,
+        lambda batch: rollup_state(batch, key_col, value_col, ts_col),
+        lambda cur, delta: merge_rollup_states(cur, delta, key_col),
+    )
 
 
 def read_rollup_state(
@@ -106,31 +67,14 @@ def read_rollup_state(
 
 
 def run_rollup_ingest(
-    spark,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema: str = (
-        "o_orderkey long, o_custkey long, o_totalprice double,"
-        " o_orderdate timestamp"
-    ),
-    max_files_per_trigger: int = 1,
-    **sink_kwargs,
-) -> None:
-    """Drain a parquet drop-dir of order rows into the rollup state
-    with ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+    spark, input_dir: str, table_dir: str, checkpoint_dir: str, **sink_kwargs
+) -> list:
+    """Drain a parquet drop-dir of order rows into the rollup state, one
+    epoch per file; returns the per-epoch progress (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(ORDER_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            rollup_state_sink(table_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .writeStream.foreachBatch(rollup_state_sink(table_dir, **sink_kwargs)),
+        checkpoint_dir,
     )

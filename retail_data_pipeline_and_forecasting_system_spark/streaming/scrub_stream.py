@@ -1,12 +1,9 @@
 """Streaming decontamination gate: x60's scrub manifest, per epoch.
 
-The eighth leg of the ingest-service family (dedup_stream gates exact
-duplicates, semantic_stream gates embedding near-dups, manifest_stream
-maintains the export receipt): a documents stream is scored against a
-FROZEN eval index — the operational shape of a real release, where the
-benchmark set is fixed BEFORE training-corpus ingest begins — and the
-per-shard scrub manifest (``x60_leakage_scrub``'s output) is
-maintained incrementally.
+A documents stream is scored against a FROZEN eval index — the
+operational shape of a real release, where the benchmark set is fixed
+BEFORE training-corpus ingest begins — and the per-shard scrub manifest
+(``x60_leakage_scrub``'s output) is maintained incrementally.
 
 Per arriving train doc the three-tier verdict is decided against the
 frozen index alone, so verdicts are row-independent and the state is
@@ -28,11 +25,9 @@ cap under either definition — true at every test SF (measured corpus
 max df: 7 at sf0.01) — the two definitions coincide and stream ==
 ``x60_leakage_scrub`` EXACTLY; the parity test pins this.
 
-Replay safety — the rollup/manifest contract: count/digest merges are
-not naturally convergent (re-applying an epoch double-counts), so the
-sink stores the last applied epoch id and SKIPS the crash-replayed
-epoch; an epoch BEHIND the stored one (a fresh checkpoint pointed at
-an existing state table) fails loudly.
+Replay safety: count/digest merges double-count if an epoch re-fires,
+so the sink is a ``sinks.epoch_guarded_sink`` (the replay contract is
+stated there).
 
 Scale: the frozen index is eval-sized (a held-out set — KBs-to-MBs
 against a 100 TB corpus), persisted once and probed by every epoch;
@@ -52,7 +47,10 @@ from ..functions import word_shingle_sets, word_shingles
 from ..operators.dedup import _band_buckets
 from ..operators.manifest import U64_MOD, manifest_rows
 from ..operators.splitaudit import split_nibble
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain, epoch_guarded_sink
+
+DOC_SCHEMA = "doc_id long, text string, source string"
 
 
 def freeze_eval_index(
@@ -241,37 +239,12 @@ def scrub_state_sink(
     idx: dict, table_dir: str
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function maintaining the per-shard scrub state
-    against the frozen eval index, with the manifest/rollup epoch
-    guard (exactly-once under crash replay; loud failure on a fresh
-    checkpoint lineage pointed at an old table)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        delta = scrub_delta_state(batch_df, idx)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"scrub_state_sink: batch_id {batch_id} is behind "
-                    f"the table's last applied epoch {last} — a new "
-                    "checkpoint lineage is pointed at an existing "
-                    "state table; use a fresh table_dir (or resume "
-                    "the original checkpoint)"
-                )
-            out = merge_scrub_states(cur.drop("__epoch"), delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    against the frozen eval index (a ``sinks.epoch_guarded_sink``)."""
+    return epoch_guarded_sink(
+        table_dir,
+        lambda batch: scrub_delta_state(batch, idx),
+        merge_scrub_states,
+    )
 
 
 def read_scrub(
@@ -292,26 +265,14 @@ def read_scrub(
 
 
 def run_scrub_ingest(
-    spark,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    idx: dict,
-    schema: str = "doc_id long, text string, source string",
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain a parquet drop-dir of document rows through the gate with
-    ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+    spark, input_dir: str, table_dir: str, checkpoint_dir: str, idx: dict
+) -> list:
+    """Drain a parquet drop-dir of document rows through the gate, one
+    epoch per file; returns the per-epoch progress (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(scrub_state_sink(idx, table_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .writeStream.foreachBatch(scrub_state_sink(idx, table_dir)),
+        checkpoint_dir,
     )

@@ -1,12 +1,11 @@
 """Streaming segment-level dedup: line/boilerplate removal at ingest.
 
-The fourth ingest service beside dedup_stream (whole-doc near-dup),
-semantic_stream (embeddings) and cdc_stream (dimension state): documents
+The line-grain sibling of dedup_stream (whole-doc near-dup): documents
 arrive on a stream and every micro-batch is SEGMENT-deduped against all
 segments ever seen — d16's RefinedWeb/CCNet line-dedup semantics run
-24/7. Unlike the doc gate, nothing is rejected wholesale: every document
-comes out with its previously-seen segments (nav bars, cookie banners,
-licence blocks) removed and its novel text kept.
+24/7. Unlike the doc gate, nothing is rejected wholesale: every
+document comes out with its previously-seen segments (nav bars, cookie
+banners, licence blocks) removed and its novel text kept.
 
 Layout (epoch-partitioned, the convention shared by all four services):
 
@@ -39,6 +38,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from .sinks import drain, write_epoch_partition
+
+DOC_SCHEMA = "doc_id long, text string"
+
 
 def segment_dedup_sink(
     segs_dir: str,
@@ -59,12 +62,6 @@ def segment_dedup_sink(
     from the original — store bytes and shuffle bytes both drop to the
     hash width. A store written in one mode must be read in the same
     mode (the layouts differ by design).
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            segment_dedup_sink(segs_dir, docs_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
     if key not in ("text", "md5"):
         raise ValueError(f"segment_dedup_sink: unknown key mode {key!r}")
@@ -111,12 +108,6 @@ def segment_dedup_sink(
                 & (F.col("__w").getField("seg_idx") == F.col("seg_idx"))
             ).alias("__keep"),
         )
-        old = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         try:
             flags = flags.persist()
             per_doc = flags.groupBy(id_col).agg(
@@ -142,29 +133,11 @@ def segment_dedup_sink(
                     " ",
                 ).alias("text_dedup"),
             )
-            (
-                docs.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(docs_dir)
-            )
+            write_epoch_partition(docs, batch_id, docs_dir)
             novel = flags.filter(F.col("__keep")).select("h")
-            (
-                novel.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(segs_dir)
-            )
+            write_epoch_partition(novel, batch_id, segs_dir)
         finally:
             flags.unpersist()
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -211,8 +184,6 @@ def segment_dedup_sink(
             F.col("__seen").isNull() & (F.row_number().over(first) == 1),
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # consumed twice (docs rollup + novel-segment append)
             ranked = ranked.persist()
@@ -232,27 +203,11 @@ def segment_dedup_sink(
                     " ",
                 ).alias("text_dedup"),
             )
-            (
-                docs.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(docs_dir)
-            )
+            write_epoch_partition(docs, batch_id, docs_dir)
             novel = ranked.filter(F.col("__keep")).select("seg")
-            (
-                novel.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(segs_dir)
-            )
+            write_epoch_partition(novel, batch_id, segs_dir)
         finally:
             ranked.unpersist()
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
 
     return write
 
@@ -263,24 +218,17 @@ def run_segment_ingest(
     segs_dir: str,
     docs_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    max_files_per_trigger: int = 1,
     **sink_kwargs,
-) -> None:
-    """Drain a JSON-lines document feed through the segment-dedup gate
-    with ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+) -> list:
+    """Drain a JSON-lines document feed through the segment-dedup gate,
+    one epoch per file; returns the per-epoch progress
+    (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
+        .writeStream.foreachBatch(
             segment_dedup_sink(segs_dir, docs_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )

@@ -60,6 +60,9 @@ from ..operators.similarity import (
     kmeans_minibatch_update,
     semantic_verdicts,
 )
+from .sinks import drain, write_epoch_partition
+
+VEC_SCHEMA = "vec_id long, embedding array<double>"
 
 
 def incremental_semantic_sink(
@@ -74,12 +77,6 @@ def incremental_semantic_sink(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: gate each embedding micro-batch through
     corpus-incremental semantic dedup, record verdicts, admit uniques.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            incremental_semantic_sink(corpus_dir, verdicts_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -123,34 +120,16 @@ def incremental_semantic_sink(
             salt=salt,
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             # consumed twice (verdict write + unique-filter join)
             verdicts = verdicts.persist()
-            (
-                verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdicts_dir)
-            )
+            write_epoch_partition(verdicts, batch_id, verdicts_dir)
             accepted = batch.select(id_col, vec_col).join(
                 verdicts.filter(F.col("status") == "unique").select(id_col),
                 id_col,
             )
-            (
-                accepted.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
-            )
+            write_epoch_partition(accepted, batch_id, corpus_dir)
         finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             verdicts.unpersist()
 
     return write
@@ -287,39 +266,22 @@ def incremental_semantic_model_sink(
             salt=salt,
         )
 
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             verdicts = verdicts.persist()
-            (
-                verdicts.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdicts_dir)
-            )
+            write_epoch_partition(verdicts, batch_id, verdicts_dir)
             accepted = batch_cells.join(
                 verdicts.filter(F.col("status") == "unique").select(id_col),
                 id_col,
             )
-            (
-                accepted.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
-            )
+            write_epoch_partition(accepted, batch_id, corpus_dir)
             (
                 model.withColumn("epoch", F.lit(int(batch_id)))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("epoch")
                 .parquet(model_dir)
             )
         finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             verdicts.unpersist()
 
         if auto_rebuild:
@@ -424,25 +386,19 @@ def rebuild_semantic_model(
         "left",
     ).select("cent_id", "cent_vec", F.coalesce("n", F.lit(0)).alias("n"))
 
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(corpus_dir)
-        )
-        (
-            model.withColumn("epoch", F.lit(int(epoch)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(model_dir)
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    (
+        assigned.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(corpus_dir)
+    )
+    (
+        model.withColumn("epoch", F.lit(int(epoch)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch")
+        .parquet(model_dir)
+    )
     return k
 
 
@@ -452,27 +408,17 @@ def run_semantic_ingest(
     corpus_dir: str,
     verdicts_dir: str,
     checkpoint_dir: str,
-    schema: str = "vec_id long, embedding array<double>",
-    max_files_per_trigger: int = 1,
     **dedup_kwargs,
-) -> None:
-    """Drain a JSON-lines embedding feed through the semantic-dedup gate
-    with ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up; a service
-    would ``start()`` without AvailableNow and run forever."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+) -> list:
+    """Drain a JSON-lines embedding feed through the semantic-dedup gate,
+    one epoch per file; returns the per-epoch progress
+    (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(VEC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .json(input_glob)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            incremental_semantic_sink(
-                corpus_dir, verdicts_dir, **dedup_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .writeStream.foreachBatch(
+            incremental_semantic_sink(corpus_dir, verdicts_dir, **dedup_kwargs)
+        ),
+        checkpoint_dir,
     )

@@ -1,25 +1,43 @@
-"""Exactly-once streaming sinks via foreachBatch.
+"""Exactly-once streaming sinks via foreachBatch, and the one drain
+every ingest service runs through.
 
 Structured Streaming's file sinks are append-only and its checkpoint
 guarantees at-least-once delivery to arbitrary sinks: after a crash
 between "sink write" and "checkpoint commit", the next run REPLAYS the
 last micro-batch. A sink that appends blindly duplicates that batch.
+Every service here survives the replay in one of three ways:
 
-``idempotent_parquet_sink`` makes the replay harmless the standard way:
-every micro-batch writes to its own ``batch_id=<epoch>`` partition with
-dynamic partition overwrite, so a replayed epoch OVERWRITES its own
-(possibly partial) output instead of appending beside it. Write +
-re-write converge to the same bytes — effectively exactly-once at the
-file level, the same idea table formats implement with manifest commits.
+- **Epoch partitions** (``idempotent_parquet_sink`` and the dedup,
+  semantic and segment services): every micro-batch writes to its own
+  ``batch_id=<epoch>`` partition with a per-write dynamic partition
+  overwrite, so a replayed epoch OVERWRITES its own (possibly partial)
+  output instead of appending beside it. Write + re-write converge to
+  the same bytes — effectively exactly-once at the file level, the
+  same idea table formats implement with manifest commits.
+- **Epoch-guarded state** (``epoch_guarded_sink``: the rollup, zonemap,
+  anomaly, manifest, scrub and m4 services): each batch is folded into
+  a versioned state table that stores the last applied epoch in an
+  ``__epoch`` column. Sum merges double-apply under replay, so
+  ``batch_id == last`` (the crash replay) is skipped, and ``batch_id <
+  last`` raises: a new checkpoint lineage is pointed at an existing
+  table, whose batches would otherwise be dropped silently. Cost: one
+  scalar read off the (small) state table per epoch. Idempotent merges
+  (m4) take the same guard; on their own lineage it changes nothing.
+- **Keyed convergence** (cdc_stream): a seq-guarded upsert re-applies
+  as a no-op; see that module.
+
+Every ``*_sink`` factory returns a foreachBatch function, and every
+``run_*`` function is ``drain(stream.writeStream.foreachBatch(sink),
+ckpt)``, which returns the per-epoch progress.
 
 The reference appends per-day CSVs with no replay story
 (src/data_processor.py single-shot batch); this is what its output
 contract needs to survive a mid-batch crash when run continuously.
 
-At 100 TB: the sink adds no shuffle (partitionBy on a literal column),
-each epoch directory is independently compactable (see
-sources/writers.compact_partition), and downstream batch readers just
-read the root — Spark merges the batch_id partitions.
+At 100 TB: the epoch-partition sinks add no shuffle (partitionBy on a
+literal column), each epoch directory is independently compactable
+(see sources/writers.compact_partition), and downstream batch readers
+just read the root — Spark merges the batch_id partitions.
 """
 
 from __future__ import annotations
@@ -27,42 +45,98 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..sources.versioned import current_version, read_version, write_version
+
+
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> list:
+    """Run ``writer`` with ``Trigger.AvailableNow`` against
+    ``checkpoint_dir``, block until everything available is processed,
+    and return the query's ``recentProgress``: one record per epoch
+    (``batchId``, ``numInputRows``, ``durationMs``, ...), the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100) of
+    them. A long-lived service would ``start()`` without AvailableNow
+    and run forever."""
+    query = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query.recentProgress
+
+
+def epoch_guarded_sink(
+    table_dir: str,
+    delta_fn: Callable[[DataFrame], DataFrame],
+    merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function folding each batch into the versioned state
+    table at ``table_dir``: ``delta_fn(batch)`` reduces the batch to a
+    delta state, ``merge_fn(stored, delta)`` merges it, and the result
+    is committed as the next version tagged with the epoch. Skips empty
+    batches and the crash-replayed epoch; raises on an epoch behind the
+    table (see the module docstring)."""
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        # the emptiness probe and every branch of the delta read one
+        # cached copy, so the source is scanned once per epoch and the
+        # epoch's progress counts each input row once
+        batch_df = batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return  # no rows -> no new (identical) version committed
+            delta = delta_fn(batch_df)
+            if current_version(table_dir) is None:
+                out = delta
+            else:
+                cur = read_version(batch_df.sparkSession, table_dir)
+                last = cur.agg(F.max("__epoch")).first()[0]
+                if last is not None and batch_id == last:
+                    return  # crash-replayed epoch, already applied
+                if last is not None and batch_id < last:
+                    raise ValueError(
+                        f"epoch_guarded_sink({table_dir}): batch_id "
+                        f"{batch_id} is behind the table's last applied "
+                        f"epoch {last} — a new checkpoint lineage is "
+                        "pointed at an existing state table; use a fresh "
+                        "table_dir (or resume the original checkpoint)"
+                    )
+                out = merge_fn(cur.drop("__epoch"), delta)
+            write_version(
+                out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
+                table_dir,
+            )
+        finally:
+            batch_df.unpersist()
+
+    return apply
+
+
+def write_epoch_partition(df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """Write ``df`` as the ``batch_id=<batch_id>`` partition of the
+    parquet store ``out_dir``, overwriting that partition only. The
+    dynamic overwrite is a per-write option, so the session's
+    ``partitionOverwriteMode`` is never touched."""
+    (
+        df.withColumn("batch_id", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(out_dir)
+    )
 
 
 def idempotent_parquet_sink(
     out_dir: str,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function writing each epoch to its own overwritten
-    partition. Use:
-
-    ``stream.writeStream.foreachBatch(idempotent_parquet_sink(d))...``
-    """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # conf was UNSET before this batch: unset it again rather
-                # than leaving the session pinned to 'dynamic', which would
-                # silently change overwrite semantics for unrelated writes
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-
-    return write
+    partition."""
+    return lambda batch_df, batch_id: write_epoch_partition(
+        batch_df, batch_id, out_dir
+    )
 
 
 def quarantine_parquet_sink(
@@ -89,32 +163,11 @@ def quarantine_parquet_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from ..operators.quality import split_by_expectations
 
-        spark = batch_df.sparkSession
         clean, bad = split_by_expectations(batch_df, rules)
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            for frame, target in ((clean, clean_dir), (bad, quarantine_dir)):
-                (
-                    frame.withColumn("batch_id", F.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(target)
-                )
-        finally:
-            if old is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # conf was UNSET before this batch: unset it again rather
-                # than leaving the session pinned to 'dynamic', which would
-                # silently change overwrite semantics for unrelated writes
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        write_epoch_partition(clean, batch_id, clean_dir)
+        write_epoch_partition(bad, batch_id, quarantine_dir)
 
     return write
 
@@ -146,8 +199,6 @@ def idempotent_jdbc_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
         jvm = spark.sparkContext._jvm
         if driver:

@@ -1,19 +1,15 @@
 """Streaming zone-map maintenance: ops8's data-skipping manifest, per
 epoch.
 
-The NINTH leg of the ingest-service family (dedup_stream gates
-documents, scrub_stream decontaminates them, semantic_stream gates
-embeddings, cdc_stream maintains dimensions, rollup_stream maintains
-aggregates, manifest_stream maintains the export receipt): an orders
-stream maintains the per-month zone-map manifest INCREMENTALLY — each
-micro-batch reduces to a per-month delta state
+An orders stream maintains the per-month zone-map manifest
+INCREMENTALLY — each micro-batch reduces to a per-month delta state
 (``operators.zonemap.zone_state``) and merges into the stored state
 (``merge_zone_states``). Every state column is algebraic (counts sum,
 stat spans min/max), so draining the same orders through ANY epoch
-slicing yields the identical manifest the batch query
-``ops8_zone_map`` computes in one pass — verdict columns included,
-because verdicts are derived from the state at READ time
-(``finalize_zone_map``), never stored.
+slicing yields the identical manifest the batch query ``ops8_zone_map``
+computes in one pass — verdict columns included, because verdicts are
+derived from the state at READ time (``finalize_zone_map``), never
+stored.
 
 This is how a real lakehouse works: Delta/Iceberg update file stats
 ON WRITE, and the planner prunes against the manifest — the
@@ -22,11 +18,9 @@ partition-cardinality-sized (~thousands of rows), each epoch reduces
 only its delta (map-side combined), and the merge is one
 month-keyed full-outer join on a tiny frame.
 
-Replay safety — the manifest_stream/rollup_stream contract: min/max
-merges are idempotent but COUNTS double-apply under replay, so the
-sink stores the last applied epoch id and SKIPS the crash-replayed
-epoch; a batch id BEHIND the stored epoch means a fresh checkpoint
-lineage was pointed at an existing state table and fails loudly.
+Replay safety: min/max merges are idempotent but COUNTS double-apply
+under replay, so the sink is a ``sinks.epoch_guarded_sink`` (the
+replay contract is stated there).
 """
 
 from __future__ import annotations
@@ -34,59 +28,31 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.zonemap import (
     finalize_zone_map,
     merge_zone_states,
     zone_state,
 )
-from ..sources.versioned import current_version, read_version, write_version
+from ..sources.versioned import read_version
+from .sinks import drain, epoch_guarded_sink
+
+ORDER_SCHEMA = (
+    "o_orderkey long, o_custkey long, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp"
+)
 
 
 def zone_state_sink(
     table_dir: str, **zone_kwargs
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function maintaining the per-month zone-map state.
-
-    Use::
-
-        stream.writeStream.foreachBatch(
-            zone_state_sink(table_dir)
-        ).option("checkpointLocation", ckpt).start()
     """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # no rows -> no new (identical) version committed
-        spark = batch_df.sparkSession
-        delta = zone_state(batch_df, **zone_kwargs)
-        if current_version(table_dir) is None:
-            out = delta
-        else:
-            cur = read_version(spark, table_dir)
-            # EPOCH GUARD: counts double-apply under replay, so the
-            # crash-replayed epoch is dropped; an epoch BEHIND the
-            # table is a new checkpoint lineage against an old table —
-            # fail loudly.
-            last = cur.agg(F.max("__epoch")).first()[0]
-            if last is not None and batch_id == last:
-                return  # crash-replayed epoch, already applied
-            if last is not None and batch_id < last:
-                raise ValueError(
-                    f"zone_state_sink: batch_id {batch_id} is behind "
-                    f"the table's last applied epoch {last} — a new "
-                    "checkpoint lineage is pointed at an existing "
-                    "state table; use a fresh table_dir (or resume "
-                    "the original checkpoint)"
-                )
-            out = merge_zone_states(cur.drop("__epoch"), delta)
-        write_version(
-            out.withColumn("__epoch", F.lit(batch_id).cast("bigint")),
-            table_dir,
-        )
-
-    return apply
+    return epoch_guarded_sink(
+        table_dir,
+        lambda batch: zone_state(batch, **zone_kwargs),
+        merge_zone_states,
+    )
 
 
 def read_zone_map(
@@ -100,31 +66,15 @@ def read_zone_map(
 
 
 def run_zonemap_ingest(
-    spark,
-    input_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    schema: str = (
-        "o_orderkey long, o_custkey long, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp"
-    ),
-    max_files_per_trigger: int = 1,
-    **sink_kwargs,
-) -> None:
-    """Drain a parquet drop-dir of order rows into the zone-map state
-    with ``Trigger.AvailableNow`` (one epoch per file at
-    ``max_files_per_trigger=1``), blocking until caught up."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+    spark, input_dir: str, table_dir: str, checkpoint_dir: str, **sink_kwargs
+) -> list:
+    """Drain a parquet drop-dir of order rows into the zone-map state,
+    one epoch per file; returns the per-epoch progress
+    (``sinks.drain``)."""
+    return drain(
+        spark.readStream.schema(ORDER_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            zone_state_sink(table_dir, **sink_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .writeStream.foreachBatch(zone_state_sink(table_dir, **sink_kwargs)),
+        checkpoint_dir,
     )

@@ -60,11 +60,13 @@ def test_stream_equals_batch(spark, tmp_path):
         shutil.copy(f, drop2 / f"part-{j}.parquet")
 
     table = str(tmp_path / "state")
-    run_rollup_ingest(
+    progress = run_rollup_ingest(
         spark, str(drop2), table, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
     )
     assert current_version(table) == 3  # one committed version per epoch
+    # the drain reports one progress record per epoch, covering every row
+    assert [p["batchId"] for p in progress] == [0, 1, 2]
+    assert sum(p["numInputRows"] for p in progress) == orders.count()
 
     got = read_rollup_state(spark, table)
     want = rollup_state(orders).withColumn(

@@ -62,7 +62,6 @@ def test_stream_equals_batch_scrub(spark, tmp_path):
     table = str(tmp_path / "state")
     run_scrub_ingest(
         spark, str(drop), table, str(tmp_path / "ckpt"), idx,
-        max_files_per_trigger=1,
     )
     assert current_version(table) == 3  # one committed version per epoch
 
@@ -118,13 +117,11 @@ def test_scrub_ingest_restart_resumes_checkpoint(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     add_slice(0)
     add_slice(1)
-    run_scrub_ingest(spark, str(drop), table, ckpt, idx,
-                     max_files_per_trigger=1)
+    run_scrub_ingest(spark, str(drop), table, ckpt, idx)
     assert current_version(table) == 2
 
     add_slice(2)  # new arrival after the first drain
-    run_scrub_ingest(spark, str(drop), table, ckpt, idx,
-                     max_files_per_trigger=1)
+    run_scrub_ingest(spark, str(drop), table, ckpt, idx)
     assert current_version(table) == 3  # ONE new epoch, not a replay
 
     got = read_scrub(spark, table)

@@ -59,7 +59,6 @@ def test_stream_equals_batch_zone_map(spark, tmp_path):
     table = str(tmp_path / "state")
     run_zonemap_ingest(
         spark, str(drop), table, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
     )
     assert current_version(table) == 3  # one committed version per epoch
 
@@ -112,14 +111,12 @@ def test_zonemap_ingest_restart_resumes_checkpoint(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     add_slice(0)
     add_slice(1)
-    run_zonemap_ingest(spark, str(drop), table, ckpt,
-                       max_files_per_trigger=1)
+    run_zonemap_ingest(spark, str(drop), table, ckpt)
     v_first = current_version(table)
     assert v_first == 2
 
     add_slice(2)  # new arrival after the first drain
-    run_zonemap_ingest(spark, str(drop), table, ckpt,
-                       max_files_per_trigger=1)
+    run_zonemap_ingest(spark, str(drop), table, ckpt)
     assert current_version(table) == v_first + 1  # ONLY the new file
 
     got = read_zone_map(spark, table)
